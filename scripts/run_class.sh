@@ -1,6 +1,8 @@
 #!/bin/bash
 # Dev-only: run a compiled graft class directly (faster than sbt runMain).
-# Usage: scripts/run_class.sh graft.Verify /root/testdata/sf0.001 /tmp/verify_out
+# Usage: scripts/run_class.sh graft.Verify <sfDir> <outDir> [regex]
+#        scripts/run_class.sh graft.Probe <plan|time|profile> <sfDir> <query...>
+#        scripts/run_class.sh graft.Bench   (SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS)
 set -e
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:/opt/spark/jars/*:$(ls -d ~/.sbt/boot/scala-2.13*/lib 2>/dev/null | head -1)/*"

@@ -10,11 +10,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
 /** Driver-side parquet footer metadata: schema and exact row counts
   * WITHOUT a Spark job. `spark.read.parquet` with no user schema runs
   * footer inference as a 1-task job per frame construction (~25 ms plus
-  * a 50-200 ms scheduler/planning gap on this host — measured with
-  * JobProbe); reading the footer on the driver costs single-digit ms
-  * and yields the identical StructType, because Spark-written files
-  * carry the exact schema JSON in the footer's key-value metadata and
-  * Spark's own inference prefers that key too. Used wherever the
+  * a 50-200 ms scheduler/planning gap, measured per job as
+  * `graft.Probe profile` reports it); reading the footer on the driver
+  * costs single-digit ms and yields the identical StructType, because
+  * Spark-written files carry the exact schema JSON in the footer's
+  * key-value metadata and Spark's own inference prefers that key too. Used wherever the
   * engine constructs a frame over files it already knows to be
   * schema-uniform (non-evolved snapshots, sidecars, just-written
   * batches); evolved (mergeSchema) reads keep Spark's distributed

@@ -565,6 +565,20 @@ class Round10OpsSpec extends SparkSpec {
     an[IllegalArgumentException] should be thrownBy TxTable.readWap(spark, table, "b1")
   }
 
+  test("WAP: a staged batch that records no files fails readWap and publishWap with a named error") {
+    val table = freshTable()
+    TxTable.commit(Seq((1L, "a")).toDF("id", "s"), table)
+    val staged = java.nio.file.Paths.get(table, "_staged", "e1.json")
+    java.nio.file.Files.createDirectories(staged.getParent)
+    java.nio.file.Files.writeString(staged, """{"wap":"e1","files":[]}""")
+    val read = intercept[IllegalArgumentException](TxTable.readWap(spark, table, "e1"))
+    read.getMessage should include ("'e1'")
+    read.getMessage should include ("records no files")
+    val publish = intercept[IllegalArgumentException](TxTable.publishWap(spark, table, "e1"))
+    publish.getMessage should include ("'e1'")
+    TxTable.currentVersion(spark, table) shouldBe 1
+  }
+
   test("WAP publish lands after a concurrent commit moved the head: the schema gate re-runs against the new head and both batches survive") {
     val table = freshTable()
     TxTable.commit(Seq((1L, 1.0)).toDF("id", "x"), table)

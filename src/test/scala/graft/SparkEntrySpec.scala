@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Driver-contract smoke: every declared query runs and returns rows at
   * sf0.001, and every oracle key maps to a real query.
   */
@@ -105,6 +107,7 @@ class SparkEntrySpec extends SparkSpec {
     Bench.effectiveMaxGrowth(8.0, 32) shouldBe 8.0
     Bench.effectiveMaxGrowth(8.0, 64) shouldBe 8.0   // never tightens
     Bench.effectiveMaxGrowth(8.0, 8) shouldBe 32.0   // 32/8 relaxation
+    Bench.effectiveMaxGrowth(8.0, 1) shouldBe 32.0   // capped at 4x, not 32x
     Bench.effectiveMaxGrowth(8.0, 0) shouldBe 8.0    // degenerate input
     // round-10 incident replayed: q322 1.50->19.16 s (12.8x) at 8 cores
     // tripped the fixed 8x gate with unchanged code; core-aware it passes
@@ -112,6 +115,20 @@ class SparkEntrySpec extends SparkSpec {
     val sf1 = Seq("q322_dedup_index_lookup" -> 19.16)
     Bench.growthViolations(base, sf1, Bench.effectiveMaxGrowth(8.0, 32)).length shouldBe 1
     Bench.growthViolations(base, sf1, Bench.effectiveMaxGrowth(8.0, 8)) shouldBe empty
+  }
+
+  test("SparkSession.builder is called only in Sessions.scala") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no $root under ${sys.props("user.dir")}")
+    val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val files = scala.util.Using.resource(java.nio.file.Files.walk(root))(
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
+    files.size should be > 1
+    val callers = files.filter { p =>
+      comments.replaceAllIn(java.nio.file.Files.readString(p), "")
+        .contains("SparkSession.builder")
+    }.map(_.getFileName.toString)
+    callers shouldBe Seq("Sessions.scala")
   }
 
   test("parseBenchQueries keeps the sf0.1 pass, not sf1_queries") {
